@@ -5,10 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** Measurement-only harness (like [[ScaleRehearsal]]): runs one
   * lifecycle query's phases standalone and prints a per-Spark-job wall
-  * table (job description / call site / duration), so a cycle's cost
+  * table (call site | job description, duration), so a cycle's cost
   * decomposes into its individual actions — the guide §1 empirical loop
   * for a code path whose work is many small jobs rather than one big
-  * stage. Never run by the driver; not part of the bench contract.
+  * stage. Each phase's END line carries its Spark job count and its
+  * count of generated-code compilations (Janino compiles, codegen-cache
+  * misses included). A standalone measurement tool, not part of the
+  * bench contract.
+  *
+  * `cycle` runs one full lifecycle cycle the way the `lifecycle`
+  * benchmark workload does (priorBuild of snapshot A, refreshTo B,
+  * deleteDocs of 25 ids only B holds, rollbackTo generation 0, the
+  * generation datasheet and fsck), e.g. at local[4]:
+  * `SPARK_GRAFT_CPUS=4 SPARK_GRAFT_SF_DIR=<dir with documents.parquet>
+  * java -cp <classes>:<spark jars> graft.ProfileCycles cycle`.
   */
 object ProfileCycles {
 
@@ -25,9 +35,9 @@ object ProfileCycles {
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("")
+        // the job's result stage is named after its short call site
+        val site = js.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse("")
         starts(js.jobId) = (js.time, s"$site | $desc")
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
@@ -37,12 +47,16 @@ object ProfileCycles {
         }
     })
 
+    // (name, start ms, end ms, compiles); job counts are read off the
+    // job lines after the listener bus has drained
+    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def phase(name: String)(body: => Unit): Unit = {
+      val c0 = compiles()
       val t0 = System.currentTimeMillis()
-      events.add((t0, s"== $name BEGIN"))
       body
-      val t1 = System.currentTimeMillis()
-      events.add((t1, f"== $name END ${(t1 - t0) / 1000.0}%7.3fs"))
+      phases += ((name, t0, System.currentTimeMillis(), compiles() - c0))
     }
 
     import graft.queries.LifecycleOps
@@ -55,6 +69,22 @@ object ProfileCycles {
     }
 
     what match {
+      case "cycle" =>
+        import spark.implicits._
+        val (sa, sb) = LifecycleOps.benchSnapshots(spark, sfDir)
+        val base = LifecycleOps.benchScratch(spark, sfDir, "profile_cycle")
+        phase("cycle priorBuild")(LifecycleOps.priorBuild(spark, base, sa))
+        val aIds = sa.select("doc_id").as[Long].collect().toSet
+        val onlyB = sb.select("doc_id").as[Long].collect()
+          .filterNot(aIds).sorted.take(25)
+        phase("cycle refreshTo")(LifecycleOps.refreshTo(spark, base, sb).collect())
+        phase("cycle deleteDocs")(LifecycleOps.deleteDocs(spark, base,
+          onlyB.toSeq.toDF("doc_id")).collect())
+        phase("cycle rollbackTo")(LifecycleOps.rollbackTo(spark, base, 0L, sa)
+          .collect())
+        phase("cycle datasheet")(
+          LifecycleOps.generationDatasheet(spark, base).collect())
+        phase("cycle fsck")(LifecycleOps.fsck(spark, base).collect())
       case "q206" =>
         val (sa, sb) = LifecycleOps.benchSnapshots(spark, sfDir)
         val base = LifecycleOps.benchScratch(spark, sfDir, "profile_refresh")
@@ -125,6 +155,13 @@ object ProfileCycles {
 
     Thread.sleep(2000) // listener bus drain
     import scala.jdk.CollectionConverters._
+    val jobs = events.asScala.toSeq
+    phases.foreach { case (name, t0, t1, nCompiles) =>
+      val nJobs = jobs.count(e => e._1 >= t0 && e._1 <= t1)
+      events.add((t0, s"== $name BEGIN"))
+      events.add((t1, f"== $name END ${(t1 - t0) / 1000.0}%7.3fs" +
+        s"  $nJobs jobs  $nCompiles compiles"))
+    }
     events.asScala.toSeq.sortBy(_._1).foreach(e => println(e._2))
     spark.stop()
   }

@@ -393,8 +393,11 @@ object Packing {
     // (PERF_NOTES r15) — a guard that outweighs the work it guards
     def empty = Seq.empty[(Long, Long, Long, String)]
       .toDF("shard_id", "n_chunks", "n_tokens", "shard_fp")
+    // read with the known schema, partition column included (an
+    // existing dir with no shard left then reads as empty): a
+    // schema-less read starts a footer-inference Spark job of its own
     val rows = try {
-      spark.read.parquet(dir)
+      spark.read.schema(ChunkSchema.add("shard_id", "bigint")).parquet(dir)
     } catch {
       case _: org.apache.spark.sql.AnalysisException => return empty
     }
@@ -409,6 +412,13 @@ object Packing {
             x => x.getField("chunk_fp")),
           " ")).as("shard_fp"))
   }
+
+  /** The columns of a [[packChunks]] frame, as [[writeShards]] stores
+    * them in every shard file.
+    */
+  val ChunkSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "chunk_id BIGINT, n_tokens BIGINT, chunk_fp STRING")
 
   /** Targeted document deletion from a [[writeShards]] directory + its
     * [[shardManifest]] (VERDICT r12 #1): remove `deletedIds`' tokens
@@ -503,7 +513,9 @@ object Packing {
     * raw text) — a normalized fingerprint (lowercased, whitespace-
     * collapsed) would classify a case-only edit as unchanged and leave
     * its stale shard on disk (ADVICE r13). Returns the post-refresh
-    * manifest with `status` like [[deleteAndRepack]].
+    * manifest with `status` like [[deleteAndRepack]], passed through
+    * `decorate` before its one eager checkpoint (a caller that adds
+    * columns to every row pays no second checkpoint for them).
     */
   def incrementalRepack(oldInput: DataFrame, newDocs: DataFrame,
       orderCol: String, tokensCol: String, fpCol: String, countCol: String,
@@ -511,7 +523,8 @@ object Packing {
       oldManifest: DataFrame,
       forcedBoundaryShard: Option[Long] = None,
       payloadOverride: Option[DataFrame] = None,
-      keysValidated: Boolean = false): DataFrame = {
+      keysValidated: Boolean = false,
+      decorate: DataFrame => DataFrame = identity): DataFrame = {
     // payloadOverride: (orderCol, tokensCol) supplied SEPARATELY from the
     // counts-only newDocs — the lifecycle cycle passes its just-written
     // pack_input as newDocs (so the diff/prefix-sum passes re-read a tiny
@@ -551,7 +564,7 @@ object Packing {
       // fingerprint differs from oldManifest
       val off = runningOffset(newCounts, orderCol, "__n", groupOf)
       return repackFromBoundary(off, payload, orderCol,
-        tokensCol, capacity, chunksPerShard, b, dir, oldManifest)
+        tokensCol, capacity, chunksPerShard, b, dir, oldManifest, decorate)
     }
     // the boundary is the FIRST differing key's stream position. The
     // pre-r16 form materialized BOTH sides' two-phase prefix sums just
@@ -564,7 +577,8 @@ object Packing {
     // min(least(old_off, new_off)) by offset monotonicity in key order;
     // two window+exchange passes over the packing inputs removed
     // (guide §2.4).
-    val firstKey = oldInput
+    val spark = newDocs.sparkSession
+    val firstKey = Eager.described(spark, "first differing key")(oldInput
       .select(col(orderCol).as("__k"), col(countCol).cast("long").as("__on"),
         col(fpCol).as("__ofp"))
       .join(newCounts.select(col(orderCol).as("__k"), col("__n").as("__nn"),
@@ -575,17 +589,19 @@ object Packing {
       // present-but-null count conservatively flags as differing)
       .filter(col("__on").isNull || col("__nn").isNull ||
         col("__on") =!= col("__nn") || !(col("__ofp") <=> col("__nfp")))
-      .agg(min(col("__k"))).collect()(0)
+      .agg(min(col("__k"))).collect()(0))
     val boundaryShard: Long =
       if (firstKey.isNullAt(0)) Long.MaxValue
       else {
-        val off = newCounts.filter(col(orderCol) < lit(firstKey.get(0)))
-          .agg(coalesce(sum(col("__n")), lit(0L))).collect()(0).getLong(0)
+        val off = Eager.described(spark, "boundary offset")(
+          newCounts.filter(col(orderCol) < lit(firstKey.get(0)))
+            .agg(coalesce(sum(col("__n")), lit(0L))).collect()(0).getLong(0))
         boundaryShardOf(off, capacity, chunksPerShard)
       }
     repackFromBoundary(runningOffset(newCounts, orderCol, "__n", groupOf),
       payload, orderCol,
-      tokensCol, capacity, chunksPerShard, boundaryShard, dir, oldManifest)
+      tokensCol, capacity, chunksPerShard, boundaryShard, dir, oldManifest,
+      decorate)
   }
 
   /** Shared boundary-restricted tail of [[deleteAndRepack]] and
@@ -602,69 +618,69 @@ object Packing {
   private def repackFromBoundary(newOffsets: DataFrame, payload: DataFrame,
       orderCol: String, tokensCol: String,
       capacity: Long, chunksPerShard: Long, boundaryShard: Long,
-      dir: String, oldManifest: DataFrame): DataFrame = {
-    val spark = newOffsets.sparkSession
-    val startPos = shardStartPos(boundaryShard, capacity, chunksPerShard)
-    // consumed by the manifest AND the rewrite; released before return
-    val (tailChunks, releaseTailChunks) = Eager.checkpoint(
-      chunkAgg(newOffsets, payload, orderCol, tokensCol, capacity,
-        startPos))
-    val tailManifest = shardManifest(tailChunks, chunksPerShard)
-    val oldTail = oldManifest.filter(col("shard_id") >= boundaryShard)
-      .select(col("shard_id"), col("n_chunks").as("__o_chunks"),
-        col("n_tokens").as("__o_tokens"), col("shard_fp").as("__o_fp"))
-    val (diff, releaseDiff) = Eager.checkpoint(
-      tailManifest.join(oldTail, Seq("shard_id"), "full_outer")
-        .select(col("shard_id"),
-          coalesce(col("n_chunks"), col("__o_chunks")).as("n_chunks"),
-          coalesce(col("n_tokens"), col("__o_tokens")).as("n_tokens"),
-          coalesce(col("shard_fp"), col("__o_fp")).as("shard_fp"),
-          when(col("shard_fp").isNull, "removed")
-            .when(col("__o_fp").isNull, "added")
-            .when(col("shard_fp") === col("__o_fp"), "kept")
-            .otherwise("rewritten").as("status")))
-    // ONE pass over the checkpointed diff decides both write sets: the
-    // pre-r16 form probed toWrite.isEmpty (an extra job over the chunk
-    // checkpoint) and collected the removed ids separately. toWrite is
-    // empty exactly when no shard is rewritten/added: every such diff
-    // row came from tailManifest, i.e. from at least one tailChunks row
-    val statusCounts = diff.groupBy("status").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (statusCounts.getOrElse("rewritten", 0L) +
-        statusCounts.getOrElse("added", 0L) > 0L) {
-      val changed = diff.filter(col("status").isin("rewritten", "added"))
-        .select("shard_id")
-      tailChunks
-        .withColumn("shard_id", chunkOf(col("chunk_id"), chunksPerShard))
-        .join(broadcast(changed), Seq("shard_id"), "left_semi")
-        .repartition(col("shard_id"))
-        .sortWithinPartitions("shard_id", "chunk_id") // the writeShards rule
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id").parquet(dir)
-    }
-    val removed =
-      if (statusCounts.getOrElse("removed", 0L) == 0L) Array.empty[Long]
-      else diff.filter(col("status") === "removed")
-        .select("shard_id").collect().map(_.getLong(0))
-    if (removed.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      removed.foreach { sid =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/shard_id=$sid"), true)
+      dir: String, oldManifest: DataFrame,
+      decorate: DataFrame => DataFrame = identity): DataFrame =
+    Eager.scoped { ck =>
+      val spark = newOffsets.sparkSession
+      val startPos = shardStartPos(boundaryShard, capacity, chunksPerShard)
+      // consumed by the manifest AND the rewrite; released on every path
+      val tailChunks = Eager.described(spark, "tail chunks")(ck(
+        chunkAgg(newOffsets, payload, orderCol, tokensCol, capacity,
+          startPos)))
+      val tailManifest = shardManifest(tailChunks, chunksPerShard)
+      val oldTail = oldManifest.filter(col("shard_id") >= boundaryShard)
+        .select(col("shard_id"), col("n_chunks").as("__o_chunks"),
+          col("n_tokens").as("__o_tokens"), col("shard_fp").as("__o_fp"))
+      // the checkpoint pass over the diff also OBSERVES both write sets:
+      // whether any shard is rewritten/added (every such row came from
+      // tailManifest, i.e. from at least one tailChunks row) and the
+      // removed shard ids — no status-count or removed-id job of its own
+      val obs = org.apache.spark.sql.Observation()
+      val changedP = col("status").isin("rewritten", "added")
+      val diff = Eager.described(spark, "shard diff")(ck(
+        tailManifest.join(oldTail, Seq("shard_id"), "full_outer")
+          .select(col("shard_id"),
+            coalesce(col("n_chunks"), col("__o_chunks")).as("n_chunks"),
+            coalesce(col("n_tokens"), col("__o_tokens")).as("n_tokens"),
+            coalesce(col("shard_fp"), col("__o_fp")).as("shard_fp"),
+            when(col("shard_fp").isNull, "removed")
+              .when(col("__o_fp").isNull, "added")
+              .when(col("shard_fp") === col("__o_fp"), "kept")
+              .otherwise("rewritten").as("status"))
+          .observe(obs, count(when(changedP, lit(1))).as("n_changed"),
+            collect_set(when(col("status") === "removed", col("shard_id")))
+              .as("removed"))))
+      if (obs.get("n_changed").asInstanceOf[Long] > 0L) {
+        val changed = diff.filter(changedP).select("shard_id")
+        Eager.described(spark, "shards")(
+          tailChunks
+            .withColumn("shard_id", chunkOf(col("chunk_id"), chunksPerShard))
+            .join(broadcast(changed), Seq("shard_id"), "left_semi")
+            .repartition(col("shard_id"))
+            .sortWithinPartitions("shard_id", "chunk_id") // the writeShards rule
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard_id").parquet(dir))
       }
+      val removed = obs.get("removed").asInstanceOf[scala.collection.Seq[Any]]
+      if (removed.nonEmpty) {
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        removed.foreach { sid =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/shard_id=$sid"), true)
+        }
+      }
+      // the returned frame is SELF-CONTAINED (its own tiny checkpoint of
+      // manifest-sized rows, outside the scope): every intermediate block
+      // is released here instead of leaking per repack (ADVICE r14's
+      // cycle-leak class)
+      val (out, _) = Eager.described(spark, "result")(Eager.checkpoint(
+        decorate(oldManifest.filter(col("shard_id") < boundaryShard)
+          .select(col("shard_id"), col("n_chunks"), col("n_tokens"),
+            col("shard_fp"), lit("kept").as("status"))
+          .unionByName(diff))))
+      out
     }
-    // the returned frame is SELF-CONTAINED (its own tiny checkpoint of
-    // manifest-sized rows): every intermediate block is released here
-    // instead of leaking per repack (ADVICE r14's cycle-leak class)
-    val (out, _) = Eager.checkpoint(
-      oldManifest.filter(col("shard_id") < boundaryShard)
-        .select(col("shard_id"), col("n_chunks"), col("n_tokens"),
-          col("shard_fp"), lit("kept").as("status"))
-        .unionByName(diff))
-    releaseTailChunks(); releaseDiff()
-    out
-  }
 
   /** Sliding-window chunking with overlap — the retrieval/eval-window
     * counterpart of [[packChunks]]: instead of concatenating documents

@@ -552,12 +552,12 @@ object LifecycleOps {
     * + dedup window + anti-join THREE times (pack_input write, funnel
     * aggregate, signature aggregate over the written file); the
     * observed write runs it once — at 100 TB that is two fewer
-    * corpus-store scans per cycle. Returns the 1-row counts frame
-    * (literals — value-identical to the aggregate it replaces) and the
-    * signature string.
+    * corpus-store scans per cycle. Returns the funnel counts
+    * (n_dedup, n_gated, n_mixed) as driver values and the signature
+    * string.
     */
   private def writePackInputObserved(s: SparkSession, art: DataFrame,
-      dest: String): (DataFrame, String) = {
+      dest: String): ((Long, Long, Long), String) = {
     val (dd, gateP, mixP) = packStageChain(art)
     val funnelObs = org.apache.spark.sql.Observation()
     val ddObs = dd.observe(funnelObs, count(lit(1)).as("n_dedup"),
@@ -567,17 +567,16 @@ object LifecycleOps {
       lpad(col("doc_id").cast("string"), 10, "0").as("okey"),
       col("n_tokens"), col("fp"), col("raw_fp"))
     val sigObs = org.apache.spark.sql.Observation()
-    packIn.observe(sigObs, count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(col("okey"), col("n_tokens"), col("raw_fp"))
-            .cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("h"))
-      .select(PackInputCols.map(col): _*)
-      .write.mode("overwrite").parquet(dest)
+    Eager.described(s, "pack_input")(
+      packIn.observe(sigObs, count(lit(1)).as("n"),
+          coalesce(sum(xxhash64(col("okey"), col("n_tokens"), col("raw_fp"))
+              .cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")).as("h"))
+        .select(PackInputSchema.fieldNames.map(col).toSeq: _*)
+        .write.mode("overwrite").parquet(dest))
     val f = funnelObs.get
-    import s.implicits._
-    val counts = Seq((f("n_dedup").asInstanceOf[Long],
-        f("n_gated").asInstanceOf[Long], f("n_mixed").asInstanceOf[Long]))
-      .toDF("n_dedup", "n_gated", "n_mixed")
+    val counts = (f("n_dedup").asInstanceOf[Long],
+      f("n_gated").asInstanceOf[Long], f("n_mixed").asInstanceOf[Long])
     val g = sigObs.get
     val sig = s"${g("n")}:${g("h").asInstanceOf[java.math.BigDecimal]
       .toBigInteger}"
@@ -589,10 +588,30 @@ object LifecycleOps {
     */
   private[graft] val KeepGenerations = 8
 
-  /** The packing-input columns persisted per generation — counts and
-    * fingerprints, never tokens or text.
+  /** The packing-input frame persisted per generation — counts and
+    * fingerprints, never tokens or text. Every store and generation
+    * frame is read with its known schema: a schema-less parquet read
+    * starts a footer-inference Spark job per read, dozens per cycle.
     */
-  private val PackInputCols = Seq("okey", "n_tokens", "fp", "raw_fp")
+  private[graft] val PackInputSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("okey STRING, n_tokens BIGINT, fp STRING, raw_fp STRING")
+
+  /** The shard manifest persisted per generation. */
+  private[graft] val ManifestSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("shard_id BIGINT, n_chunks BIGINT, n_tokens BIGINT, shard_fp STRING")
+
+  /** The lifecycle tombstone store's rows (doc ids, always BIGINT). */
+  private[graft] val TombstoneSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
+
+  private def readPackInput(s: SparkSession, genDir: String): DataFrame =
+    s.read.schema(PackInputSchema).parquet(s"$genDir/pack_input")
+
+  private def readManifest(s: SparkSession, genDir: String): DataFrame =
+    s.read.schema(ManifestSchema).parquet(s"$genDir/manifest")
+
+  private def tombstoneIds(s: SparkSession, base: String): Option[DataFrame] =
+    IndexMaintenance.tombstoneIds(s, base, Some(TombstoneSchema))
 
   // -------------------------------------------------------------------
   // The per-doc artifact store: ONE mutable doc_id-range-partitioned
@@ -615,8 +634,11 @@ object LifecycleOps {
   // pack_input/manifest are.
   // -------------------------------------------------------------------
 
-  private[graft] val ArtifactCols =
-    Seq("doc_id", "lang", "text", "fp", "raw_fp", "score_micro", "n_tokens")
+  private[graft] val ArtifactSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("doc_id BIGINT, lang STRING, text STRING, fp STRING, " +
+      "raw_fp STRING, score_micro BIGINT, n_tokens BIGINT")
+
+  private[graft] val ArtifactCols: Seq[String] = ArtifactSchema.fieldNames.toSeq
 
   private def artifactsDir(base: String): String = s"$base/artifacts"
 
@@ -624,87 +646,118 @@ object LifecycleOps {
     Generations.readMarker(s, s"${artifactsDir(base)}/_PART_WIDTH")
       .map(_.toLong).getOrElse(1024L)
 
+  /** The artifact partition of `doc_id` under partition width `w`. */
+  private def partOf(w: Long): Column = expr(s"CAST(doc_id div $w AS BIGINT)")
+
   private def emptyArtifacts(s: SparkSession): DataFrame = {
     import s.implicits._
     Seq.empty[(Long, String, String, String, String, Long, Long)]
       .toDF(ArtifactCols: _*)
   }
 
-  /** The artifact store's rows (empty-store safe, no partition column
-    * — a fully-deleted corpus is a valid state). MUTABLE-store read:
-    * per the read-safety rule on [[currentManifest]], frames from here
-    * are cycle-internal and must be consumed before the next
+  /** The artifact store's rows with their `part` column (empty-store
+    * safe: a fully-deleted corpus is a valid state). The read carries
+    * the partition column in its schema, so a store dir left without
+    * data files reads as empty; a missing dir shows as the read's own
+    * AnalysisException, not a driver-side recursive walk of every part
+    * dir — the diskManifest lesson (PERF_NOTES r15).
+    */
+  private def readArtifactParts(s: SparkSession, base: String): DataFrame =
+    try s.read.schema(ArtifactSchema.add("part", "bigint"))
+      .parquet(artifactsDir(base))
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        emptyArtifacts(s).withColumn("part", lit(0L))
+    }
+
+  /** The artifact store's rows (no partition column). MUTABLE-store
+    * read: per the read-safety rule on [[currentManifest]], frames from
+    * here are cycle-internal and must be consumed before the next
     * [[flushArtifacts]] rewrites the partitions they lazily reference.
     */
   private[graft] def readArtifacts(s: SparkSession, base: String): DataFrame =
-    // emptiness via the read's own AnalysisException (missing path or
-    // nothing to infer a schema from), not a driver-side recursive
-    // walk of every part dir — the diskManifest lesson (PERF_NOTES r15)
-    try s.read.parquet(artifactsDir(base)).select(ArtifactCols.map(col): _*)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException => emptyArtifacts(s)
-    }
+    readArtifactParts(s, base).select(ArtifactCols.map(col): _*)
 
   /** Rewrite ONLY the artifact partitions that contain a removed id or
-    * an added/recomputed row: locate affected `part=` dirs from the id
-    * frames (≤ |delta| values to the driver), eagerly checkpoint the
-    * affected partitions' surviving rows (they are about to be
-    * overwritten — the read-then-overwrite discipline, volume ∝
-    * delta × partition width), dynamic-partition-overwrite them
-    * together with the new rows, and explicitly remove partitions the
-    * rewrite emptied (dynamic overwrite never touches a partition
-    * absent from its output). Checkpoint blocks are released by
-    * tracked id afterwards.
+    * an added/recomputed row: `affected` (the callers observe it on the
+    * checkpoint that already locates their id frames — no separate
+    * collect), eagerly checkpoint the affected partitions' surviving
+    * rows (they are about to be overwritten — the read-then-overwrite
+    * discipline, volume ∝ delta × partition width), dynamic-partition-
+    * overwrite them together with the new rows, and explicitly remove
+    * partitions the rewrite emptied (dynamic overwrite never touches a
+    * partition absent from its output): every affected partition that
+    * neither keeps a survivor (observed on the survivors checkpoint)
+    * nor receives an added row (`addParts`). The survivors checkpoint
+    * is released on every path.
     */
-  private def flushArtifacts(s: SparkSession, base: String,
-      removeIds: DataFrame, addIds: DataFrame, addArt: DataFrame): Unit = {
-    val dir = artifactsDir(base)
-    val w = partWidth(s, base)
-    def partsOf(ids: DataFrame): DataFrame =
-      ids.select(expr(s"doc_id div $w").as("part"))
-    // removeIds/addIds are the callers' CHECKPOINTED small id frames —
-    // deriving parts from addArt itself would re-run the delta
-    // semi-join per consumer (measured seconds per cycle at 400k)
-    val affected = partsOf(removeIds.select("doc_id"))
-      .union(partsOf(addIds.select("doc_id")))
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.isEmpty) return
-    val priorRows =
-      try s.read.parquet(dir)
-        .filter(col("part").isin(affected: _*))
-        .select(ArtifactCols.map(col): _*)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => emptyArtifacts(s)
+  private def flushArtifacts(s: SparkSession, base: String, w: Long,
+      affected: Set[Long], addParts: Set[Long], removeIds: DataFrame,
+      addIds: DataFrame, addArt: DataFrame): Unit =
+    if (affected.nonEmpty) Eager.scoped { ck =>
+      val dir = artifactsDir(base)
+      val obs = org.apache.spark.sql.Observation()
+      // eager survivors BEFORE the overwrite (read-then-overwrite rule),
+      // released by the frame's own handle — not a registry diff, which
+      // would capture a concurrent query's RDDs (ADVICE r14)
+      val survivors = Eager.described(s, "survivors")(ck(
+        readArtifactParts(s, base)
+          .filter(col("part").isin(affected.toSeq: _*))
+          .select(ArtifactCols.map(col): _*)
+          .join(removeIds.select(col("doc_id").as("__rm")),
+            col("doc_id") === col("__rm"), "left_anti")
+          .join(addIds.select(col("doc_id").as("__add")),
+            col("doc_id") === col("__add"), "left_anti")
+          .observe(obs, collect_set(partOf(w)).as("parts"))))
+      Eager.described(s, "artifacts")(
+        survivors.unionByName(addArt.select(ArtifactCols.map(col): _*))
+          .withColumn("part", partOf(w))
+          // ONE file per partition dir: without the repartition every
+          // shuffle partition emits a file into every touched part dir
+          // and the store explodes into parts × tasks small files — each
+          // of the cycle's store scans then pays thousands of file opens
+          // (measured: the 400k refresh rung tripled)
+          .repartition(col("part"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("part").parquet(dir))
+      val nonEmpty = addParts ++ observedLongs(obs, "parts")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      affected.filterNot(nonEmpty).foreach { p =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/part=$p"), true)
       }
-    // eager survivors BEFORE the overwrite (read-then-overwrite rule),
-    // released by the frame's own handle — not a registry diff, which
-    // would capture a concurrent query's RDDs (ADVICE r14)
-    val (survivors, releaseSurvivors) = graft.operators.Eager.checkpoint(
-      priorRows
-        .join(removeIds.select(col("doc_id").as("__rm")),
-          col("doc_id") === col("__rm"), "left_anti")
-        .join(addIds.select(col("doc_id").as("__add")),
-          col("doc_id") === col("__add"), "left_anti"))
-    survivors.unionByName(addArt.select(ArtifactCols.map(col): _*))
-      .withColumn("part", expr(s"doc_id div $w"))
-      // ONE file per partition dir: without the repartition every
-      // shuffle partition emits a file into every touched part dir and
-      // the store explodes into parts × tasks small files — each of
-      // the cycle's store scans then pays thousands of file opens
-      // (measured: the 400k refresh rung tripled)
-      .repartition(col("part"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(dir)
-    val nonEmpty = partsOf(survivors.select("doc_id"))
-      .union(partsOf(addIds.select("doc_id")))
-      .distinct().collect().map(_.getLong(0)).toSet
-    releaseSurvivors()
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    affected.filterNot(nonEmpty).foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/part=$p"), true)
     }
+
+  /** An observed `collect_set` of longs, as a driver set. */
+  private def observedLongs(obs: org.apache.spark.sql.Observation,
+      name: String): Set[Long] =
+    obs.get(name).asInstanceOf[scala.collection.Seq[Any]]
+      .map(_.asInstanceOf[Long]).toSet
+
+  /** Physically fold `ids` out of the artifact store: the ids the store
+    * actually holds are checkpointed (the store is about to be
+    * rewritten), and that one pass also observes the store's row count,
+    * the hit count and the partitions they sit in, so the fold needs no
+    * other action than its partition rewrite. Returns (rows in the
+    * store before, ids removed).
+    */
+  private def foldOutOfStore(s: SparkSession, base: String,
+      ids: DataFrame): (Long, Long) = Eager.scoped { ck =>
+    val w = partWidth(s, base)
+    val obsB = org.apache.spark.sql.Observation()
+    val obsR = org.apache.spark.sql.Observation()
+    val gone = Eager.described(s, "gone ids")(ck(
+      readArtifacts(s, base).select("doc_id")
+        .observe(obsB, count(lit(1)).as("n_b"))
+        .join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
+        .observe(obsR, count(lit(1)).as("n_removed"),
+          collect_set(partOf(w)).as("parts"))))
+    val none = emptyArtifacts(s)
+    flushArtifacts(s, base, w, observedLongs(obsR, "parts"), Set.empty,
+      gone, none.select("doc_id"), none)
+    (obsB.get("n_b").asInstanceOf[Long],
+      obsR.get("n_removed").asInstanceOf[Long])
   }
 
   /** THE READ-SAFETY RULE (VERDICT r14 #7) for every frame crossing the
@@ -726,15 +779,26 @@ object LifecycleOps {
     * LifecycleReadSafetySpec pins all three clauses.
     */
   private[graft] def currentManifest(s: SparkSession, base: String): DataFrame =
-    s.read.parquet(s"${Generations.dir(base, requireCurrent(s, base))}/manifest")
+    readManifest(s, Generations.dir(base, requireCurrent(s, base)))
 
   /** See the read-safety rule on [[currentManifest]]. */
   private[graft] def currentPackInput(s: SparkSession, base: String): DataFrame =
-    s.read.parquet(s"${Generations.dir(base, requireCurrent(s, base))}/pack_input")
+    readPackInput(s, Generations.dir(base, requireCurrent(s, base)))
 
   private def requireCurrent(s: SparkSession, base: String): Long =
     Generations.current(s, base).getOrElse(throw new IllegalStateException(
       s"no committed generation under $base — run priorBuild first"))
+
+  /** Hold the writer lease on `base` for `body` (released in `finally`),
+    * with every Spark job `body` submits described as `call`.
+    */
+  private def leased[A](s: SparkSession, base: String, call: String)(
+      body: String => A): A = Eager.described(s, call) {
+    val holder = s"$call-${java.util.UUID.randomUUID()}"
+    Generations.acquireLease(s, base, holder)
+    try body(holder)
+    finally Generations.releaseLease(s, base, holder)
+  }
 
   /** The prior FULL build: per-doc artifacts, packing input, and
     * manifest persisted as generation 0 under `base` (committed via
@@ -743,15 +807,11 @@ object LifecycleOps {
     * [[rollbackTo]] consumes.
     */
   private[graft] def priorBuild(s: SparkSession, base: String,
-      docs: DataFrame): Unit = {
-    val holder = s"build-${java.util.UUID.randomUUID()}"
-    Generations.acquireLease(s, base, holder)
-    try priorBuildLeased(s, base, docs)
-    finally Generations.releaseLease(s, base, holder)
-  }
+      docs: DataFrame): Unit =
+    leased(s, base, "priorBuild")(_ => priorBuildLeased(s, base, docs))
 
   private def priorBuildLeased(s: SparkSession, base: String,
-      docs: DataFrame): Unit = {
+      docs: DataFrame): Unit = Eager.scoped { ck =>
     // a from-scratch build into a base that already holds committed
     // generations would commit gen_0 UNDER the existing current
     // generation — refuse loudly; rebuilds start from a cleared base
@@ -768,20 +828,22 @@ object LifecycleOps {
     // The same id scan carries the duplicate-id guard (count vs distinct)
     // that ESTABLISHES the store's doc_id-uniqueness invariant every
     // later cycle trusts (cycleTail's keysValidated repack)
-    val idStats = docs.agg(coalesce(max("doc_id"), lit(0L)).as("m"),
-      count(lit(1)).as("n"), countDistinct(col("doc_id")).as("d"))
-      .collect()(0)
+    val idStats = Eager.described(s, "id stats")(
+      docs.agg(coalesce(max("doc_id"), lit(0L)).as("m"),
+        count(lit(1)).as("n"), countDistinct(col("doc_id")).as("d"))
+        .collect()(0))
     val maxId = idStats.getLong(0)
     require(idStats.getLong(1) == idStats.getLong(2),
       s"priorBuild snapshot holds duplicate doc_ids (${idStats.getLong(1)} " +
         s"rows over ${idStats.getLong(2)} ids) — the packing order key " +
         "must be unique")
     val w = math.max(1024L, (maxId + 256L) / 256L)
-    docArtifacts(docs)
-      .withColumn("part", expr(s"doc_id div $w"))
-      .repartition(col("part")) // one file per part dir (see flushArtifacts)
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(artifactsDir(base))
+    Eager.described(s, "artifacts")(
+      docArtifacts(docs)
+        .withColumn("part", partOf(w))
+        .repartition(col("part")) // one file per part dir (see flushArtifacts)
+        .write.mode("overwrite").partitionBy("part")
+        .parquet(artifactsDir(base)))
     Generations.writeMarker(s, s"${artifactsDir(base)}/_PART_WIDTH",
       w.toString)
     // the artifact write above is the build's first long pole; keep
@@ -795,7 +857,7 @@ object LifecycleOps {
     // the two (a full extra write+read of the token bytes through the
     // block manager)
     writePackInputObserved(s, readArtifacts(s, base), s"$g0/pack_input")
-    val packMeta = s.read.parquet(s"$g0/pack_input")
+    val packMeta = readPackInput(s, g0)
     val payload = readArtifacts(s, base).select(
       lpad(col("doc_id").cast("string"), 10, "0").as("okey"),
       TextFunctions.tokens(col("text")).as("tk"))
@@ -803,16 +865,17 @@ object LifecycleOps {
     // compact chunk frame once so the pack subtree (prefix sum + payload
     // join + explode + per-chunk md5 over the corpus) computes once
     // (the q138 diamond rule; chunk rows are (id, count, fp) — tiny)
-    val (chunks, releaseChunks) = Eager.checkpoint(
+    val chunks = Eager.described(s, "chunks")(ck(
       Packing.packChunksWithCounts(packMeta, payload, "okey", "tk",
-        "n_tokens", 256, groupOf))
+        "n_tokens", 256, groupOf)))
     // the two consumers read the tiny checkpoint and write disjoint
     // paths — overlap them (guide §2.6)
     inParallel(
-      () => Packing.shardManifest(chunks, 4).write.mode("overwrite")
-        .parquet(s"$g0/manifest"),
-      () => Packing.writeShards(chunks, s"$base/shards", 4))
-    releaseChunks()
+      () => Eager.described(s, "manifest")(
+        Packing.shardManifest(chunks, 4).write.mode("overwrite")
+          .parquet(s"$g0/manifest")),
+      () => Eager.described(s, "shards")(
+        Packing.writeShards(chunks, s"$base/shards", 4)))
     // a full write replaces whatever an interrupted repack left behind
     Generations.dropMarker(s, s"$base/shards/_REPACK_IN_PROGRESS")
     Generations.commit(s, base, 0L)
@@ -864,93 +927,85 @@ object LifecycleOps {
       newDocs: DataFrame, failAt: Option[String] = None,
       packGate: String => Unit = _ => (),
       manifestGate: String => Unit = _ => (),
-      skipIfNoop: Boolean = false): DataFrame = {
-    val holder = s"refresh-${java.util.UUID.randomUUID()}"
-    Generations.acquireLease(s, base, holder)
-    try {
+      skipIfNoop: Boolean = false): DataFrame =
+    leased(s, base, "refreshTo") { holder =>
       val cur = requireCurrent(s, base)
       Generations.cleanUncommitted(s, base)
+      val w = partWidth(s, base)
       // right-to-be-forgotten composition: ids tombstoned between
       // refreshes stay deleted even if the new snapshot still holds them.
       // Contract: newDocs must NOT derive from this base's artifact
       // store — the cycle mutates it in place (deleteDocs works from the
       // id set for exactly this reason)
       //
-      // the funnel's n_b/n_masked halves ride the diff checkpoint as
-      // OBSERVATIONS on the frames that evaluation already scans — the
-      // pre-r16 funnel re-aggregated newDocs and masked in a separate
-      // 4-way crossJoin checkpoint (two extra snapshot scans per cycle)
+      // every count the cycle needs before the tail rides the ONE diff
+      // checkpoint as OBSERVATIONS on frames that evaluation already
+      // scans: n_b/n_masked on the snapshot, the duplicate-id guard on
+      // the grouped new side (the full-outer diff exchanges on doc_id
+      // anyway, so grouping there adds no exchange), and the delta and
+      // removed counts plus the artifact partitions the delta touches
+      // on the diff rows — no separate collect per count
       val obsB = org.apache.spark.sql.Observation()
       val obsM = org.apache.spark.sql.Observation()
+      val obsG = org.apache.spark.sql.Observation()
+      val obsD = org.apache.spark.sql.Observation()
       val masked = IndexMaintenance.dropTombstoned(
-          newDocs.observe(obsB, count(lit(1)).as("n_b")), "doc_id", s, base)
+          newDocs.observe(obsB, count(lit(1)).as("n_b")), "doc_id", s, base,
+          Some(TombstoneSchema))
         .observe(obsM, count(lit(1)).as("n_after_mask"))
-      val artPrior = readArtifacts(s, base)
-      val newFps = masked.select(col("doc_id"), md5(col("text")).as("raw_fp"))
-      val (diff, releaseDiff) = Eager.checkpoint(
-        graft.operators.Snapshot.corpusDiff(
-          artPrior.select("doc_id", "raw_fp"), newFps, "doc_id", "raw_fp"))
-      val nB = obsB.get("n_b").asInstanceOf[Long]
-      val nMasked = nB - obsM.get("n_after_mask").asInstanceOf[Long]
-      // one tiny pass over the CHECKPOINTED diff: the delta/removed
-      // funnel counts, plus the duplicate-snapshot-id guard — a new-side
-      // duplicate fans out the full-outer diff (the old side is the
-      // store, unique by invariant), so n_rows > n_ids detects exactly
-      // what the repack's okey-uniqueness guard caught, EARLIER (before
-      // any token work or store mutation) and without its per-cycle
-      // pack_input scans
-      val d0 = diff.agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("id")).as("n_ids"),
-        count(when(col("status").isin("added", "changed"), lit(1)))
-          .as("n_delta"),
-        count(when(col("status") === "removed", lit(1))).as("n_removed"))
-        .collect()(0)
-      if (d0.getLong(0) != d0.getLong(1))
-        throw new IllegalArgumentException(
-          s"refresh snapshot holds duplicate doc_ids (${d0.getLong(0)} diff " +
-            s"rows over ${d0.getLong(1)} ids) — the packing order key must " +
-            "be unique (the stream order and the old/new diff are " +
-            "undefined under duplicates)")
-      // noop short-circuit (the streamed refresh face's replay
-      // idempotence): an empty diff means the committed state already
-      // equals the target — commit NOTHING, mint no generation
-      if (skipIfNoop && d0.getLong(2) == 0L && d0.getLong(3) == 0L) {
-        releaseDiff()
-        return noopResult(s, base, nB, nMasked)
+      val newFps = masked.groupBy("doc_id")
+        .agg(max(md5(col("text"))).as("raw_fp"), count(lit(1)).as("__n"))
+        .observe(obsG, max(col("__n")).as("max_rows_per_id"))
+      val isDelta = col("status").isin("added", "changed")
+      val isGone = col("status").isin("removed", "changed")
+      val (funnel, noop) = Eager.scoped { ck =>
+        val diff = Eager.described(s, "diff")(ck(
+          graft.operators.Snapshot.corpusDiff(
+              readArtifacts(s, base).select("doc_id", "raw_fp"), newFps,
+              "doc_id", "raw_fp")
+            .withColumn("doc_id", col("id"))
+            .observe(obsD,
+              count(when(isDelta, lit(1))).as("n_delta"),
+              count(when(col("status") === "removed", lit(1))).as("n_removed"),
+              collect_set(when(col("status") =!= "unchanged", partOf(w)))
+                .as("parts"),
+              collect_set(when(isDelta, partOf(w))).as("add_parts"))))
+        // a new-side duplicate makes the stream order and the old/new
+        // diff undefined: rejected here, before any token work or store
+        // mutation (the old side is the store, unique by invariant)
+        val maxRows = Option(obsG.get("max_rows_per_id"))
+          .fold(0L)(_.asInstanceOf[Long])
+        if (maxRows > 1L)
+          throw new IllegalArgumentException(
+            s"refresh snapshot holds duplicate doc_ids (up to $maxRows rows " +
+              "for one id) — the packing order key must be unique (the " +
+              "stream order and the old/new diff are undefined under " +
+              "duplicates)")
+        val nB = obsB.get("n_b").asInstanceOf[Long]
+        val funnel = (nB, nB - obsM.get("n_after_mask").asInstanceOf[Long],
+          obsD.get("n_delta").asInstanceOf[Long],
+          obsD.get("n_removed").asInstanceOf[Long])
+        // noop short-circuit (the streamed refresh face's replay
+        // idempotence): an empty diff means the committed state already
+        // equals the target — commit NOTHING, mint no generation
+        val noop = skipIfNoop && funnel._3 == 0L && funnel._4 == 0L
+        if (!noop) {
+          // both id frames are filters over the materialized diff; the
+          // ONLY tokenization-bound work of the refresh is the delta
+          val deltaIds = diff.filter(isDelta).select("doc_id")
+          val deltaArt = docArtifacts(
+            masked.join(deltaIds, Seq("doc_id"), "left_semi"))
+          // write ∝ delta: only affected artifact partitions rewritten
+          flushArtifacts(s, base, w, observedLongs(obsD, "parts"),
+            observedLongs(obsD, "add_parts"),
+            diff.filter(isGone).select("doc_id"), deltaIds, deltaArt)
+        }
+        (funnel, noop)
       }
-      // both id frames derive from the checkpointed diff — overlap the
-      // two tiny checkpoint jobs (guide §2.6)
-      var deltaIds: DataFrame = null; var releaseDeltaIds: () => Unit = null
-      var gone: DataFrame = null; var releaseGone: () => Unit = null
-      inParallel(
-        () => {
-          val r = Eager.checkpoint(
-            diff.filter(col("status").isin("added", "changed"))
-              .select(col("id").as("doc_id")))
-          deltaIds = r._1; releaseDeltaIds = r._2
-        },
-        () => {
-          val r = Eager.checkpoint(
-            diff.filter(col("status").isin("removed", "changed"))
-              .select(col("id").as("doc_id")))
-          gone = r._1; releaseGone = r._2
-        })
-      // the ONLY tokenization-bound work of the refresh: the delta
-      val deltaArt = docArtifacts(
-        masked.join(deltaIds, Seq("doc_id"), "left_semi"))
-      // write ∝ delta: only affected artifact partitions rewritten
-      flushArtifacts(s, base, gone, deltaIds, deltaArt)
-      import s.implicits._
-      val funnel = Seq((nB, nMasked, d0.getLong(2), d0.getLong(3)))
-        .toDF("n_b", "n_masked", "n_delta", "n_removed")
-      // every pre-tail checkpoint is consumed by here (deltaArt inside
-      // flushArtifacts) — release now instead of leaking blocks per
-      // cycle (ADVICE r14)
-      releaseDiff(); releaseDeltaIds(); releaseGone()
-      cycleTail(s, base, cur, holder, funnel, () => (), failAt,
-        packGate, manifestGate)
-    } finally Generations.releaseLease(s, base, holder)
-  }
+      if (noop) noopResult(s, base, funnel._1, funnel._2)
+      else cycleTail(s, base, cur, holder, funnel, failAt, packGate,
+        manifestGate)
+    }
 
   /** The readout of a [[refreshTo]] whose diff is EMPTY under
     * `skipIfNoop`: nothing was written and no generation committed —
@@ -967,27 +1022,28 @@ object LifecycleOps {
     val funnel = Seq((nB, nMasked, 0L, 0L))
       .toDF("n_b", "n_masked", "n_delta", "n_removed")
       .crossJoin(counts)
-    val (out, _) = Eager.checkpoint(
+    val (out, _) = Eager.described(s, "noop result")(Eager.checkpoint(
       currentManifest(s, base)
         .select("shard_id", "n_chunks", "n_tokens", "shard_fp")
         .withColumn("status", lit("kept"))
-        .crossJoin(broadcast(funnel)))
+        .crossJoin(broadcast(funnel))))
     out
   }
 
   /** The shared back half of a lifecycle cycle ([[refreshTo]],
-    * [[deleteDocs]]): global stages over the (already-flushed)
-    * artifact store, the uncommitted-generation writes, the dirty-
-    * marker-bracketed repack, gates, atomic commit, prune. `funnel` is
-    * the caller's eagerly-materialized 1-row (n_b, n_masked, n_delta,
-    * n_removed) frame with `releaseFunnel` its checkpoint handle —
-    * released here once folded into the returned frame.
+    * [[deleteDocs]], [[fsckRepair]]): global stages over the (already-
+    * flushed) artifact store, the uncommitted-generation writes, the
+    * dirty-marker-bracketed repack, gates, atomic commit, prune.
+    * `funnel` is the caller's (n_b, n_masked, n_delta, n_removed); the
+    * returned frame is the repack's one result checkpoint with the full
+    * funnel on every row. Every checkpoint the tail takes is released
+    * in `finally` — the result too, unless the cycle commits.
     */
   private def cycleTail(s: SparkSession, base: String, cur: Long,
-      holder: String, funnel: DataFrame, releaseFunnel: () => Unit,
+      holder: String, funnel: (Long, Long, Long, Long),
       failAt: Option[String],
       packGate: String => Unit,
-      manifestGate: String => Unit): DataFrame = {
+      manifestGate: String => Unit): DataFrame = Eager.scoped { ck =>
     def inject(point: String): Unit =
       if (failAt.contains(point))
         throw new RuntimeException(s"injected lifecycle failure at $point")
@@ -1003,8 +1059,8 @@ object LifecycleOps {
     // the ONE dedup-pipeline evaluation of the cycle: funnel counts and
     // the repack signature ride the pack_input write as observations
     // (pack_input never references tk, so the write tokenizes nothing)
-    val (counts, sig) = writePackInputObserved(s, readArtifacts(s, base),
-      s"$gN/pack_input")
+    val ((nDedup, nGated, nMixed), sig) =
+      writePackInputObserved(s, readArtifacts(s, base), s"$gN/pack_input")
     inject("after-pack-input")
     packGate(gN)
     // every counts-only repack pass below (first-diff, prefix sums)
@@ -1016,7 +1072,7 @@ object LifecycleOps {
     // stream fall out of the suffix equi-join (membership is
     // pack_input's), and pack_input rows always have a store row (the
     // pipeline derives from the store).
-    val packMeta = s.read.parquet(s"$gN/pack_input")
+    val packMeta = readPackInput(s, gN)
     val payload = readArtifacts(s, base).select(
       lpad(col("doc_id").cast("string"), 10, "0").as("okey"),
       TextFunctions.tokens(col("text")).as("tk"))
@@ -1030,16 +1086,14 @@ object LifecycleOps {
     val dirtyPath = s"$shardsDir/_REPACK_IN_PROGRESS"
     val priorDirty = Generations.readMarker(s, dirtyPath)
     val repair = priorDirty.exists(_ != sig)
-    val (oldInput, oldManifest, releaseOldManifest) =
-      if (repair) {
-        val (m, rel) = Eager.checkpoint(Packing.diskManifest(s, shardsDir))
+    val (oldInput, oldManifest) =
+      if (repair)
         (s.emptyDataFrame
           .select(lit("").as("okey"), lit(0L).as("n_tokens"),
             lit("").as("raw_fp")).limit(0),
-          m, rel)
-      } else
-        (s.read.parquet(s"$gC/pack_input"),
-          s.read.parquet(s"$gC/manifest"), () => ())
+          Eager.described(s, "disk manifest")(
+            ck(Packing.diskManifest(s, shardsDir))))
+      else (readPackInput(s, gC), readManifest(s, gC))
     // a REPAIR run writes a sentinel that can never equal a clean
     // signature: a crash MID-REPAIR leaves disk in a three-way mix, and
     // a re-run of the same target must repair AGAIN, not take the cheap
@@ -1049,23 +1103,32 @@ object LifecycleOps {
     Generations.writeMarker(s, dirtyPath,
       if (repair) s"REPAIR:$sig" else sig)
     inject("mid-repair")
+    // the funnel is driver values: it folds into the repack's ONE result
+    // checkpoint as a broadcast 1-row frame, never a Spark job of its own
+    import s.implicits._
+    val funnelRow = Seq((funnel._1, funnel._2, funnel._3, funnel._4,
+        nDedup, nGated, nMixed))
+      .toDF("n_b", "n_masked", "n_delta", "n_removed", "n_dedup",
+        "n_gated", "n_mixed")
     // incrementalRepack returns a SELF-CONTAINED eager frame (every
-    // shard write has run by the time it returns); release its own
-    // checkpoint once folded into the cycle result below
+    // shard write has run by the time it returns) — the ONE checkpoint
+    // that outlives the cycle (tiny: manifest rows × funnel columns),
+    // released here unless the cycle commits.
     // keysValidated: okey uniqueness is the store's doc_id uniqueness,
     // an INVARIANT here — priorBuild rejects duplicate snapshot ids,
     // refreshTo rejects a duplicate-id snapshot at the diff (before any
     // token work), and deleteDocs/fsckRepair only remove rows — so the
     // generic repack guards' two pack_input scans are pure rework on
     // this path (guide §1.2: don't compute things you throw away)
-    val result = Packing.incrementalRepack(
-      oldInput, packMeta,
-      "okey", "tk", "raw_fp", "n_tokens", 256, groupOf, 4, shardsDir,
-      oldManifest,
-      forcedBoundaryShard = if (repair) Some(0L) else None,
-      payloadOverride = Some(payload),
-      keysValidated = true)
-    val releaseResult = () => Eager.release(result)
+    val result = ck.register(Eager.described(s, "repack")(
+      Packing.incrementalRepack(
+        oldInput, packMeta,
+        "okey", "tk", "raw_fp", "n_tokens", 256, groupOf, 4, shardsDir,
+        oldManifest,
+        forcedBoundaryShard = if (repair) Some(0L) else None,
+        payloadOverride = Some(payload),
+        keysValidated = true,
+        decorate = _.crossJoin(broadcast(funnelRow)))))
     // the rewrite completed (result is eagerly materialized, so every
     // shard write ran): disk now equals the target stream — flip the
     // repair sentinel to the clean signature so a later same-target
@@ -1073,34 +1136,20 @@ object LifecycleOps {
     if (repair) Generations.writeMarker(s, dirtyPath, sig)
     inject("after-shards")
     Generations.renewLease(s, base, holder)
-    // the manifest write (from the checkpointed result) and the funnel
-    // fold (two 1-row frames) are independent — overlap them; the
-    // commit marker still lands only after the manifest write returns
-    var funnelFull: DataFrame = null
-    var releaseFunnelFull: () => Unit = null
-    inParallel(
-      () => result.filter(col("status") =!= "removed")
-        .select("shard_id", "n_chunks", "n_tokens", "shard_fp")
-        .write.mode("overwrite").parquet(s"$gN/manifest"),
-      () => {
-        val r = Eager.checkpoint(funnel.crossJoin(counts))
-        funnelFull = r._1; releaseFunnelFull = r._2
-      })
+    Eager.described(s, "manifest")(
+      result.filter(col("status") =!= "removed")
+        .select(ManifestSchema.fieldNames.map(col).toSeq: _*)
+        .write.mode("overwrite").parquet(s"$gN/manifest"))
     inject("after-manifest")
     manifestGate(gN)
     Generations.commit(s, base, cur + 1)
     Generations.dropMarker(s, dirtyPath)
     Generations.prune(s, base, KeepGenerations)
-    // the returned frame is itself eagerly materialized — the ONE
-    // checkpoint that outlives the cycle (tiny: manifest rows × funnel
-    // columns). The rule (VERDICT r14 #7): every frame crossing the
-    // lifecycle API boundary either holds its own materialized rows or
-    // reads only the immutable committed generation of its birth —
-    // never mutable store paths a later cycle/prune rewrites. Every
-    // intermediate checkpoint is released here (ADVICE r14).
-    val (out, _) = Eager.checkpoint(result.crossJoin(broadcast(funnelFull)))
-    releaseFunnel(); releaseOldManifest(); releaseResult(); releaseFunnelFull()
-    out
+    // the rule (VERDICT r14 #7): every frame crossing the lifecycle API
+    // boundary either holds its own materialized rows or reads only the
+    // immutable committed generation of its birth — never mutable store
+    // paths a later cycle/prune rewrites
+    ck.keep(result)
   }
 
   /** Targeted deletion from the lifecycle state — tombstones first (the
@@ -1125,39 +1174,23 @@ object LifecycleOps {
     */
   private[graft] def deleteDocs(s: SparkSession, base: String,
       ids: DataFrame, idCol: String = "doc_id",
-      failAt: Option[String] = None): DataFrame = {
-    val holder = s"delete-${java.util.UUID.randomUUID()}"
-    Generations.acquireLease(s, base, holder)
-    try {
+      failAt: Option[String] = None): DataFrame =
+    leased(s, base, "deleteDocs") { holder =>
       val cur = requireCurrent(s, base)
       Generations.cleanUncommitted(s, base)
-      IndexMaintenance.writeTombstones(ids, idCol, base,
-        nextTombstoneBatch(s, base))
+      // doc ids are BIGINT throughout the lifecycle (the tombstone
+      // store is read back with that schema)
+      val del = ids.select(col(idCol).cast("long").as("doc_id"))
+      Eager.described(s, "tombstones")(
+        IndexMaintenance.writeTombstones(del, "doc_id", base,
+          nextTombstoneBatch(s, base)))
       if (failAt.contains("after-tombstones"))
         throw new RuntimeException(
           "injected lifecycle failure at after-tombstones")
-      val del = ids.select(col(idCol).as("doc_id")).distinct()
-      val art = readArtifacts(s, base)
-      // n_b/n_removed ride the gone checkpoint as observations on the
-      // frames that evaluation already scans (the pre-r16 funnel
-      // re-scanned the store for its count in a separate checkpoint)
-      val obsB = org.apache.spark.sql.Observation()
-      val obsR = org.apache.spark.sql.Observation()
-      val (gone, releaseGone) = Eager.checkpoint(
-        art.select("doc_id").observe(obsB, count(lit(1)).as("n_b"))
-          .join(del, Seq("doc_id"), "left_semi")
-          .observe(obsR, count(lit(1)).as("n_removed")))
-      import s.implicits._
-      val funnel = Seq((obsB.get("n_b").asInstanceOf[Long], 0L, 0L,
-          obsR.get("n_removed").asInstanceOf[Long]))
-        .toDF("n_b", "n_masked", "n_delta", "n_removed")
-      flushArtifacts(s, base, gone, emptyArtifacts(s).select("doc_id"),
-        emptyArtifacts(s))
-      releaseGone()
-      cycleTail(s, base, cur, holder, funnel, () => (), failAt,
+      val (nB, nRemoved) = foldOutOfStore(s, base, del)
+      cycleTail(s, base, cur, holder, (nB, 0L, 0L, nRemoved), failAt,
         _ => (), _ => ())
-    } finally Generations.releaseLease(s, base, holder)
-  }
+    }
 
   /** Next deletion batch id for `base`'s tombstone store: one past the
     * highest live partition and the folded-history marker, so manual
@@ -1206,45 +1239,46 @@ object LifecycleOps {
     */
   private[graft] def rollbackTo(s: SparkSession, base: String,
       version: Long, docsOfVersion: DataFrame,
-      failAt: Option[String] = None): DataFrame = {
-    val gens = Generations.committed(s, base)
-    require(gens.contains(version),
-      s"generation $version is not committed under $base " +
-        s"(committed: ${gens.mkString(", ")}) — pruned past the " +
-        s"$KeepGenerations-generation rollback window or never built")
-    val gV = Generations.dir(base, version)
-    val tombs = IndexMaintenance.tombstoneIds(s, base)
-    val packGate: String => Unit = { gN =>
-      tombs match {
-        case None =>
-          requireFramesEqual(s.read.parquet(s"$gN/pack_input"),
-            s.read.parquet(s"$gV/pack_input"), PackInputCols,
-            s"rollback to generation $version: rebuilt pack_input " +
-              "diverges from the recorded generation — the supplied " +
-              "docs are not that generation's snapshot (aborted before " +
-              "any shard was touched)")
-        case Some(t) =>
-          val resurrected = s.read.parquet(s"$gN/pack_input")
-            .join(t.select(lpad(col("id").cast("string"), 10, "0")
-              .as("okey")), Seq("okey"), "left_semi")
-            .limit(1).collect()
-          require(resurrected.isEmpty,
-            s"rollback to generation $version would resurrect " +
-              s"tombstoned doc okey=${resurrected.headOption
-                .map(_.get(0)).getOrElse("")}")
+      failAt: Option[String] = None): DataFrame =
+    Eager.described(s, "rollbackTo") {
+      val gens = Generations.committed(s, base)
+      require(gens.contains(version),
+        s"generation $version is not committed under $base " +
+          s"(committed: ${gens.mkString(", ")}) — pruned past the " +
+          s"$KeepGenerations-generation rollback window or never built")
+      val gV = Generations.dir(base, version)
+      val tombs = tombstoneIds(s, base)
+      val packGate: String => Unit = gN => Eager.described(s, "pack gate") {
+        tombs match {
+          case None =>
+            requireFramesEqual(readPackInput(s, gN), readPackInput(s, gV),
+              PackInputSchema.fieldNames.toSeq,
+              s"rollback to generation $version: rebuilt pack_input " +
+                "diverges from the recorded generation — the supplied " +
+                "docs are not that generation's snapshot (aborted before " +
+                "any shard was touched)")
+          case Some(t) =>
+            val resurrected = readPackInput(s, gN)
+              .join(t.select(lpad(col("id").cast("string"), 10, "0")
+                .as("okey")), Seq("okey"), "left_semi")
+              .limit(1).collect()
+            require(resurrected.isEmpty,
+              s"rollback to generation $version would resurrect " +
+                s"tombstoned doc okey=${resurrected.headOption
+                  .map(_.get(0)).getOrElse("")}")
+        }
       }
+      val manifestGate: String => Unit = gN =>
+        Eager.described(s, "manifest gate") {
+        if (tombs.isEmpty)
+          requireFramesEqual(readManifest(s, gN), readManifest(s, gV),
+            ManifestSchema.fieldNames.toSeq,
+            s"rollback to generation $version: rebuilt manifest diverges " +
+              "from the recorded generation (commit aborted)")
+      }
+      refreshTo(s, base, docsOfVersion, failAt = failAt, packGate = packGate,
+        manifestGate = manifestGate)
     }
-    val manifestGate: String => Unit = { gN =>
-      if (tombs.isEmpty)
-        requireFramesEqual(s.read.parquet(s"$gN/manifest"),
-          s.read.parquet(s"$gV/manifest"),
-          Seq("shard_id", "n_chunks", "n_tokens", "shard_fp"),
-          s"rollback to generation $version: rebuilt manifest diverges " +
-            "from the recorded generation (commit aborted)")
-    }
-    refreshTo(s, base, docsOfVersion, failAt = failAt, packGate = packGate,
-      manifestGate = manifestGate)
-  }
 
   /** Per-shard diff of two committed generations' recorded manifests —
     * the post-hoc readout of what a cycle between them did, derived
@@ -1254,7 +1288,7 @@ object LifecycleOps {
   private[graft] def manifestDiff(s: SparkSession, base: String,
       from: Long, to: Long): DataFrame = {
     def man(g: Long, p: String) =
-      s.read.parquet(s"${Generations.dir(base, g)}/manifest")
+      readManifest(s, Generations.dir(base, g))
         .select(col("shard_id"), col("n_chunks").as(s"${p}nc"),
           col("n_tokens").as(s"${p}nt"), col("shard_fp").as(s"${p}fp"))
     man(to, "n_").join(man(from, "o_"), Seq("shard_id"), "full_outer")
@@ -1330,70 +1364,71 @@ object LifecycleOps {
     * post-crash audit must do. Assumes the CURRENT generation's frames
     * are readable (committed_frames reports the ones that are not).
     */
-  private[graft] def fsck(s: SparkSession, base: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val gens = Generations.committed(s, base)
-    val missingFrames = (for {
-      g <- gens; f <- Seq("pack_input", "manifest")
-    } yield s"${Generations.dir(base, g)}/$f")
-      .count(p => IndexMaintenance.dataFileCount(s, p) == 0L).toLong
-    val orphans =
-      if (!fs.exists(new Path(base))) 0L
-      else fs.listStatus(new Path(base)).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("gen_"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("gen_").toLong).toOption)
-        .count(g => !gens.contains(g)).toLong
-    val dirty =
-      if (Generations.readMarker(s,
-        s"$base/shards/_REPACK_IN_PROGRESS").isDefined) 1L else 0L
-    val staleLease =
-      if (fs.exists(new Path(base, Generations.LeaseName)) &&
-        Generations.leaseHolder(s, base).isEmpty) 1L else 0L
-    val packIn = currentPackInput(s, base)
-      .select(col("okey").cast("long").as("doc_id"), col("raw_fp"))
-    val tombs = IndexMaintenance.tombstoneIds(s, base)
-      .map(_.select(col("id").as("doc_id")).distinct())
-    val art = readArtifacts(s, base)
-      .select(col("doc_id"), col("raw_fp").as("art_fp"))
-    // the four distributed checks are independent counting aggregates —
-    // union them into ONE action so their stages run concurrently
-    // instead of as four sequential jobs (guide §2.6; same counts)
-    def one(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("violations"))
-        .select(lit(name).as("check_name"), col("violations"))
-    val distributed = Seq(
-      tombs.map(t => one("tombstone_resurrected",
-        packIn.join(t, Seq("doc_id"), "left_semi"))),
-      tombs.map(t => one("tombstone_in_artifacts",
-        art.join(t, Seq("doc_id"), "left_semi"))),
-      Some(one("artifact_missing",
-        packIn.join(art, Seq("doc_id"), "left_outer")
-          .filter(col("art_fp").isNull || col("art_fp") =!= col("raw_fp")))),
-      Some(one("shard_audit", Packing
-        .auditShards(s, s"$base/shards", currentManifest(s, base))
-        .filter(!col("fp_match") || !col("chunks_match") ||
-          !col("tokens_match"))))).flatten
-      .reduce(_ unionByName _)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val resurrected = distributed.getOrElse("tombstone_resurrected", 0L)
-    val tombInArt = distributed.getOrElse("tombstone_in_artifacts", 0L)
-    val artMissing = distributed("artifact_missing")
-    val shardViol = distributed("shard_audit")
-    import s.implicits._
-    Seq(
-      ("artifact_missing", artMissing),
-      ("committed_frames", missingFrames),
-      ("orphan_generations", orphans),
-      ("repack_dirty", dirty),
-      ("shard_audit", shardViol),
-      ("stale_lease", staleLease),
-      ("tombstone_in_artifacts", tombInArt),
-      ("tombstone_resurrected", resurrected))
-      .toDF("check_name", "violations")
-      .withColumn("passed", col("violations") === 0L)
-  }
+  private[graft] def fsck(s: SparkSession, base: String): DataFrame =
+    Eager.described(s, "fsck") {
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(base)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val gens = Generations.committed(s, base)
+      val missingFrames = (for {
+        g <- gens; f <- Seq("pack_input", "manifest")
+      } yield s"${Generations.dir(base, g)}/$f")
+        .count(p => IndexMaintenance.dataFileCount(s, p) == 0L).toLong
+      val orphans =
+        if (!fs.exists(new Path(base))) 0L
+        else fs.listStatus(new Path(base)).toSeq.map(_.getPath.getName)
+          .filter(_.startsWith("gen_"))
+          .flatMap(n => scala.util.Try(n.stripPrefix("gen_").toLong).toOption)
+          .count(g => !gens.contains(g)).toLong
+      val dirty =
+        if (Generations.readMarker(s,
+          s"$base/shards/_REPACK_IN_PROGRESS").isDefined) 1L else 0L
+      val staleLease =
+        if (fs.exists(new Path(base, Generations.LeaseName)) &&
+          Generations.leaseHolder(s, base).isEmpty) 1L else 0L
+      val packIn = currentPackInput(s, base)
+        .select(col("okey").cast("long").as("doc_id"), col("raw_fp"))
+      val tombs = tombstoneIds(s, base)
+        .map(_.select(col("id").as("doc_id")).distinct())
+      val art = readArtifacts(s, base)
+        .select(col("doc_id"), col("raw_fp").as("art_fp"))
+      // the four distributed checks are independent counting aggregates —
+      // union them into ONE action so their stages run concurrently
+      // instead of as four sequential jobs (guide §2.6; same counts)
+      def one(name: String, df: DataFrame): DataFrame =
+        df.agg(count(lit(1)).as("violations"))
+          .select(lit(name).as("check_name"), col("violations"))
+      val distributed = Seq(
+        tombs.map(t => one("tombstone_resurrected",
+          packIn.join(t, Seq("doc_id"), "left_semi"))),
+        tombs.map(t => one("tombstone_in_artifacts",
+          art.join(t, Seq("doc_id"), "left_semi"))),
+        Some(one("artifact_missing",
+          packIn.join(art, Seq("doc_id"), "left_outer")
+            .filter(col("art_fp").isNull || col("art_fp") =!= col("raw_fp")))),
+        Some(one("shard_audit", Packing
+          .auditShards(s, s"$base/shards", currentManifest(s, base))
+          .filter(!col("fp_match") || !col("chunks_match") ||
+            !col("tokens_match"))))).flatten
+        .reduce(_ unionByName _)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val resurrected = distributed.getOrElse("tombstone_resurrected", 0L)
+      val tombInArt = distributed.getOrElse("tombstone_in_artifacts", 0L)
+      val artMissing = distributed("artifact_missing")
+      val shardViol = distributed("shard_audit")
+      import s.implicits._
+      Seq(
+        ("artifact_missing", artMissing),
+        ("committed_frames", missingFrames),
+        ("orphan_generations", orphans),
+        ("repack_dirty", dirty),
+        ("shard_audit", shardViol),
+        ("stale_lease", staleLease),
+        ("tombstone_in_artifacts", tombInArt),
+        ("tombstone_resurrected", resurrected))
+        .toDF("check_name", "violations")
+        .withColumn("passed", col("violations") === 0L)
+    }
 
   /** Repair the repairable [[fsck]] classes IN PLACE — what an operator
     * runs after fsck reports violations on a state root whose source
@@ -1443,9 +1478,7 @@ object LifecycleOps {
     val staleLease =
       if (fs.exists(new Path(base, Generations.LeaseName)) &&
         Generations.leaseHolder(s, base).isEmpty) 1L else 0L
-    val holder = s"fsck-repair-${java.util.UUID.randomUUID()}"
-    Generations.acquireLease(s, base, holder)
-    val actions = try {
+    val actions = leased(s, base, "fsckRepair") { holder =>
       val cur = requireCurrent(s, base)
       val gens = Generations.committed(s, base)
       val orphans = fs.listStatus(new Path(base)).toSeq
@@ -1459,43 +1492,25 @@ object LifecycleOps {
       // cycle never touches it, deriving everything from the artifact
       // store), the dropped count is unknowable and reads 0; the
       // post-cycle broken-generation sweep below removes the husk
-      val dropped = scala.util.Try(currentPackInput(s, base)
-        .select(col("okey").cast("long").as("doc_id"))
-        .join(art.select(col("doc_id"), col("raw_fp").as("art_fp")),
-          Seq("doc_id"), "left_outer")
-        .filter(col("art_fp").isNull).count()).getOrElse(0L)
-      val tombs = IndexMaintenance.tombstoneIds(s, base)
-        .map(_.select(col("id").as("doc_id")).distinct())
-      // n_b and the folded count ride the gone checkpoint as
-      // observations on frames that evaluation already scans — the
-      // pre-r16 funnel re-scanned the store for its count in a separate
-      // crossJoin checkpoint (store reads are cycle-internal; both land
-      // before the fold mutates the store)
-      val obsB = org.apache.spark.sql.Observation()
-      val obsR = org.apache.spark.sql.Observation()
-      val (gone, releaseGone) = Eager.checkpoint(tombs
-        .map(t => art.select("doc_id")
-          .observe(obsB, count(lit(1)).as("n_b"))
-          .join(t, Seq("doc_id"), "left_semi"))
-        .getOrElse(emptyArtifacts(s).select("doc_id"))
-        .observe(obsR, count(lit(1)).as("n_removed")))
-      val folded = obsR.get("n_removed").asInstanceOf[Long]
-      // no tombstone store → gone never scanned art; count it directly
-      val nB =
-        if (tombs.isDefined) obsB.get("n_b").asInstanceOf[Long]
-        else art.count()
-      import s.implicits._
-      val funnel = Seq((nB, 0L, 0L, folded))
-        .toDF("n_b", "n_masked", "n_delta", "n_removed")
-      flushArtifacts(s, base, gone, emptyArtifacts(s).select("doc_id"),
-        emptyArtifacts(s))
-      releaseGone()
+      val dropped = scala.util.Try(Eager.described(s, "dropped docs")(
+        currentPackInput(s, base)
+          .select(col("okey").cast("long").as("doc_id"))
+          .join(art.select(col("doc_id"), col("raw_fp").as("art_fp")),
+            Seq("doc_id"), "left_outer")
+          .filter(col("art_fp").isNull).count())).getOrElse(0L)
+      // n_b and the folded count ride the fold's own checkpoint as
+      // observations (store reads are cycle-internal; both land before
+      // the fold mutates the store); no tombstone store → nothing to
+      // fold, count the store directly
+      val (nB, folded) = tombstoneIds(s, base)
+        .map(t => foldOutOfStore(s, base, t.select(col("id").as("doc_id"))))
+        .getOrElse((Eager.described(s, "store rows")(art.count()), 0L))
       // force the disk-derived repair: external shard corruption leaves
       // the committed-vs-target diff EMPTY (the pack is unchanged), so
       // only a bytes-on-disk reconciliation can find and rewrite it
       Generations.writeMarker(s, s"$base/shards/_REPACK_IN_PROGRESS",
         "REPAIR:fsck-forced")
-      val res = cycleTail(s, base, cur, holder, funnel, () => (),
+      val res = cycleTail(s, base, cur, holder, (nB, 0L, 0L, folded),
         failAt, _ => (), _ => ())
       Eager.release(res)
       // sweep broken generations AFTER the cycle commits, when the
@@ -1516,7 +1531,7 @@ object LifecycleOps {
         ("repair_lease_reclaimed", staleLease),
         ("repair_orphans_swept", orphans),
         ("repair_tombstones_folded", folded))
-    } finally Generations.releaseLease(s, base, holder)
+    }
     import s.implicits._
     fsck(s, base).unionByName(actions.toDF("check_name", "violations")
       .withColumn("passed", lit(true)))
@@ -1810,11 +1825,11 @@ object LifecycleOps {
       gens: Seq[Long]): DataFrame = {
     val lazyFrame = gens.map { g =>
       val gd = Generations.dir(base, g)
-      val pi = s.read.parquet(s"$gd/pack_input")
+      val pi = readPackInput(s, gd)
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum("n_tokens"), lit(0L)).cast("long")
             .as("n_doc_tokens"))
-      val mf = s.read.parquet(s"$gd/manifest")
+      val mf = readManifest(s, gd)
         .agg(count(lit(1)).as("n_shards"),
           coalesce(sum("n_tokens"), lit(0L)).cast("long")
             .as("n_shard_tokens"),
@@ -1829,7 +1844,7 @@ object LifecycleOps {
         col("manifest_fp"))
     }.reduce(_ unionByName _)
     // materialize under the pins; the returned frame holds its own rows
-    lazyFrame.localCheckpoint(true)
+    Eager.described(s, "generationDatasheet")(lazyFrame.localCheckpoint(true))
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -2048,11 +2063,8 @@ object LifecycleOps {
         "doc_id", base, 0L)
       // artifact rows vanished (through the store's own targeted
       // partition rewrite — the realistic shape of silent data loss)
-      val (vanished, releaseVanished) = Eager.checkpoint(
+      foldOutOfStore(s, base,
         b.filter(pmod(col("doc_id"), lit(41)) === 6).select("doc_id"))
-      flushArtifacts(s, base, vanished,
-        emptyArtifacts(s).select("doc_id"), emptyArtifacts(s))
-      releaseVanished()
       // a shard directory gone from under its manifest
       fs.delete(new org.apache.hadoop.fs.Path(
         s"$base/shards/shard_id=1"), true)
@@ -2084,11 +2096,8 @@ object LifecycleOps {
       IndexMaintenance.writeTombstones(
         b.filter(pmod(col("doc_id"), lit(31)) === 3).select("doc_id"),
         "doc_id", base, 0L)
-      val (vanished, releaseVanished) = Eager.checkpoint(
+      foldOutOfStore(s, base,
         b.filter(pmod(col("doc_id"), lit(41)) === 6).select("doc_id"))
-      flushArtifacts(s, base, vanished,
-        emptyArtifacts(s).select("doc_id"), emptyArtifacts(s))
-      releaseVanished()
       fs.delete(new org.apache.hadoop.fs.Path(
         s"$base/shards/shard_id=1"), true)
       fsckRepair(s, base)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Compaction for the partition-per-micro-batch index stores
   * ([[StreamingDedup]]'s LSH/segment-digest indexes, [[RetrievalStream]]'s
@@ -181,13 +182,17 @@ object IndexMaintenance {
 
   /** The deleted-id frame of the store at `dir`, if any deletion has
     * ever been recorded: one `id` column, duplicates possible across
-    * deletion batches (anti-join semantics don't care).
+    * deletion batches (anti-join semantics don't care). A store whose
+    * id type is fixed passes its `schema` (`id` only), which spares the
+    * read its footer-inference job.
     */
-  def tombstoneIds(spark: SparkSession, dir: String): Option[DataFrame] = {
+  def tombstoneIds(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val p = new Path(dir, TombstonesName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).select("id"))
+    else Some(schema.fold(spark.read)(spark.read.schema)
+      .parquet(p.toString).select("id"))
   }
 
   /** Fold closed tombstone batches (ids < `upToBatch` of the DELETION
@@ -208,8 +213,8 @@ object IndexMaintenance {
     * untouched (zero cost on never-deleted stores).
     */
   def dropTombstoned(df: DataFrame, idCol: String, spark: SparkSession,
-      dir: String): DataFrame =
-    tombstoneIds(spark, dir).fold(df) { t =>
+      dir: String, schema: Option[StructType] = None): DataFrame =
+    tombstoneIds(spark, dir, schema).fold(df) { t =>
       df.join(t.select(col("id").as("__tomb_id")),
         df(idCol) === col("__tomb_id"), "left_anti")
     }

@@ -119,6 +119,33 @@ class CommitProtocolSpec extends SparkSpec {
     }
   }
 
+  test("a cycle killed after its repack releases every checkpoint it took") {
+    val all = docs
+    val ids = all.select("doc_id").collect().map(_.getLong(0)).sorted
+    val cut = ids(ids.length * 8 / 10)
+    val (a, b) = (snapA(all, cut), snapB(all, cut))
+    val base = Files.createTempDirectory("commit_release").toString
+    LifecycleOps.priorBuild(spark, base, a)
+    // at these points the cycle holds the diff, survivors, tail-chunk,
+    // shard-diff and result checkpoints: a failed cycle hands out no
+    // result, so none of them may stay behind
+    for (kp <- Seq("after-shards", "after-manifest"))
+      assertReleases(s"refreshTo killed at $kp", allowed = 0) {
+        val e = intercept[RuntimeException] {
+          LifecycleOps.refreshTo(spark, base, b, failAt = Some(kp))
+        }
+        assert(e.getMessage.contains(kp))
+      }
+    assertReleases("deleteDocs killed at after-manifest", allowed = 0) {
+      intercept[RuntimeException] {
+        LifecycleOps.deleteDocs(spark, base,
+          a.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"),
+          failAt = Some("after-manifest"))
+      }
+    }
+    assert(Generations.current(spark, base).contains(0L))
+  }
+
   test("a rollback killed at every point leaves the prior generation " +
       "current, and the re-run lands the recorded state whole") {
     val all = docs

@@ -146,9 +146,9 @@ class LifecycleReadSafetySpec extends SparkSpec {
     val base = Files.createTempDirectory("readsafe_leak").toString
     val all = docs
     LifecycleOps.priorBuild(spark, base, all.filter(col("doc_id") < 150))
-    // every intermediate checkpoint (diff, delta ids, funnel, repack
-    // result, survivors) is released inside the cycle (ADVICE r14);
-    // only the returned frame's own materialization may remain
+    // every intermediate checkpoint (diff, survivors, tail chunks,
+    // shard diff) is released inside the cycle (ADVICE r14); only the
+    // returned frame's own materialization may remain
     assertReleases("refreshTo", allowed = 1) {
       LifecycleOps.refreshTo(spark, base,
         all.filter(col("doc_id") < 200)).collect()
